@@ -1,22 +1,23 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: times every SparkEntry query at the given SF and
   * prints ONE JSON line on stdout (the driver contract). Extra
   * diagnostics — per-query deltas vs the newest BENCH_r*.json in the
   * working directory — go to stderr only.
   *
-  * Fidelity rules (round-1 lesson): the shared silver cache is warmed
-  * in the warmup block so the alphabetically-first silver consumer
-  * isn't billed for the one-time silver build, and results are
-  * materialized by draining full InternalRows (a bare `.count()` lets
-  * column pruning skip computing the aggregate output columns).
+  * Fidelity rules (round-1 lesson): the shared silver cache and staged
+  * frames are warmed from [[SparkEntry.warmRegistry]] so the
+  * alphabetically-first consumer isn't billed for a one-time build,
+  * and results are drained with [[Harness.materialize]].
+  *
+  * A query that throws is not a result: it is left out of `queries`
+  * and the total and named in the board's `failed` list (NonFatal
+  * only — a fatal error aborts the run as the warmup does).
   */
 object Bench {
-
-  private[graft] def materialize(df: DataFrame): Unit =
-    df.queryExecution.toRdd.foreach(_ => ())
 
   /** Settle outstanding page-cache writeback before a timed run: the
     * write-heavy queries (serving sink, compaction, z-order) leave GBs
@@ -65,7 +66,7 @@ object Bench {
       val before = SparkEntry.stageNames(spark, dir)
       settleDisk()
       val t0 = System.nanoTime()
-      materialize(SparkEntry.queries(name)(spark, dir))
+      Harness.materialize(SparkEntry.queries(name)(spark, dir))
       val sec = (System.nanoTime() - t0) / 1e9
       (sec, SparkEntry.stageNames(spark, dir) -- before)
     }
@@ -138,85 +139,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same instant regime as Verify/oracle: the TIMESTAMP_NTZ→
-      // TimestampType normalization in Tables.events is session-tz-
-      // dependent, so an unpinned Bench on a non-UTC host would time
-      // the events family under shifted instants
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the JVM/codegen/file-listing paths AND the shared silver
-    // cache; run queries in name order so per-query numbers are
-    // comparable across rounds.
-    // r10 (verdict item): per-stage warmup seconds ride in the board
-    // JSON as a "warmup" object — amortized staging cost is real work
-    // and must be auditable next to the per-query rows, not stderr-only
-    val warmup = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // NonFatal only: an OOM/interrupt during warmup must abort the run
-    // loudly — swallowing it would time every query in a corrupted JVM
-    // and ship a plausible-looking garbage board
-    def warm(stage: String)(body: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      val ok = try { body; true } catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] warmup stage $stage FAILED: ${e.getMessage}")
-        false }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // a FAILED stage records its elapsed NEGATED — the artifact
-      // alone must distinguish completed staging from aborted staging
-      // (r11 ADVICE: failure was stderr-only, invisible in the JSON)
-      warmup(stage) = if (ok) sec else -sec
-    }
-    warm("lineitem_listing") {
-      graft.sources.Tables.lineitem(spark, sfDir).count() }
-    warm("silver_events") {
-      materialize(SparkEntry.queries("silver_events")(spark, sfDir)) }
-    // r18: the daily-sales mart is the shared BASE TABLE of the ~28
-    // catalog/lifecycle/stream queries — staged once (30 rows at any
-    // SF) like silver, so lifecycle rows time commit-plane work, not
-    // 2–4 rebuilds each of the same mart (see SparkEntry.goldDaily)
-    warm("gold_daily_staged") {
-      materialize(SparkEntry.stageGoldDaily(spark, sfDir)) }
-    // the staged duplicate-pair and cluster frames are shared across
-    // the dedup/curation queries the same way silver is shared by
-    // the marts — warm them so the alphabetically-first consumer
-    // isn't billed for the build
-    warm("dedup_pairs") {
-      materialize(SparkEntry.queries("dedup_ngram_jaccard")(spark, sfDir)) }
-    warm("dedup_clusters") {
-      materialize(SparkEntry.queries("dedup_clusters")(spark, sfDir)) }
-    // r19: the curation-verdict frame (3 consumers: apply/listing/
-    // dashboard) joins the staged pool the same way — its
-    // alphabetically-first consumer (text_apply_curation) was billed
-    // ~2-3 s of verdict staging the other two then read for free
-    warm("curation_verdicts") {
-      materialize(SparkEntry.queries("text_curation_verdicts")(spark, sfDir)) }
-    // MinHash/SimHash signature frames likewise have two consumers
-    // (their listing query + the gate report) but the report sorts
-    // ALPHABETICALLY FIRST, so without warmup the report is billed
-    // for signature staging that a production pipeline materializes
-    // once as a table; warm here so both consumers time query work
-    // (the sf1 warmup mirrors this — ratio numerator and denominator
-    // stay comparable)
-    warm("minhash_signatures") {
-      materialize(SparkEntry.queries("dedup_minhash_lsh")(spark, sfDir)) }
-    warm("simhash_signatures") {
-      materialize(SparkEntry.queries("dedup_simhash")(spark, sfDir)) }
-    // the decode-once media frame has FOUR consumers (meta, features,
-    // modality stats, frame sampling) — warm it so the
-    // alphabetically-first consumer isn't billed for the one-time
-    // encode+decode a production pipeline persists as a table
-    warm("media_decoded") {
-      materialize(SparkEntry.queries("mm_media_meta")(spark, sfDir)) }
-    // abs: failed stages record NEGATED elapsed (the artifact
-    // convention) — they still SPENT the time, so the stderr total
-    // must add it, not subtract it
-    System.err.println(f"[bench] warmup staging took ${warmup.values.map(math.abs).sum}%.2f s (amortized, not billed to queries)")
+    val spark = Harness.session()
+    // run queries in name order so per-query numbers are comparable
+    // across rounds; per-stage warmup seconds ride in the board JSON
+    // as a "warmup" object — amortized staging cost is real work and
+    // must be auditable next to the per-query rows
+    val warmup = Harness.warmAll(spark, sfDir, SparkEntry.warmStages(sf1 = false))
     // Dirty-run self-flagging (round-4 lesson: a concurrent JVM inflated
     // ~12 queries 3-10x in the closing artifact): stamp the OS load
     // average into the JSON line, and give any query that comes in >1.3x
@@ -234,20 +162,20 @@ object Bench {
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val loadStart = osBean.getSystemLoadAverage
     val createdStages = scala.collection.mutable.Map.empty[String, Set[String]]
-    val firstPass = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    val firstPass = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val before = SparkEntry.stageNames(spark, sfDir)
       settleDisk()
-      val t0 = System.nanoTime()
-      try { materialize(fn(spark, sfDir)) } catch { case _: Throwable => }
-      val sec = (System.nanoTime() - t0) / 1e9
+      val sec = timed(name)(Harness.materialize(fn(spark, sfDir)))
       createdStages(name) = SparkEntry.stageNames(spark, sfDir) -- before
-      name -> sec
+      if (sec.isEmpty) failed += name
+      sec.map(name -> _)
     }
     val prevBoard = previousBench()
     val (prevName, prev, prevSha) = (prevBoard.name, prevBoard.queries, prevBoard.sha)
     var reruns = 0
     val outliers = scala.collection.mutable.Set.empty[String]
-    val results = firstPass.map { case (name, sec) =>
+    val results = firstPass.flatMap { case (name, sec) =>
       val p = prev.getOrElse(name, 0.0)
       val outlier = p > 0.05 && sec > p * 1.3 && sec > 0.3
       if (outlier) outliers += name
@@ -266,24 +194,28 @@ object Bench {
           SparkEntry.evictStages(spark, sfDir, evicted)
           settleDisk()
           val t0 = System.nanoTime()
-          try { materialize(SparkEntry.queries(name)(spark, sfDir)) }
-          catch { case _: Throwable => }
+          Harness.materialize(SparkEntry.queries(name)(spark, sfDir))
           (System.nanoTime() - t0) / 1e9
         }
+        if (outlier) reruns += 1
         // same robust policy as the sf1 curve: these numbers are the
         // sf1 ratio denominators, and r6 saw two clean boards agree on
         // sf1 absolute times (9/11 within ±13%) yet disagree on ratios
         // purely because the base denominators drifted with machine
         // warmth — the denominator needs the same sampling discipline
-        // as the numerator
-        val sec2 = once()
-        val best = robustSec(sec, sec2, () => once())
-        if (outlier) reruns += 1
-        val tag = if (evicted.nonEmpty) s" (evicted ${evicted.mkString(",")})" else ""
-        System.err.println(
-          f"[bench] re-run $name%-36s $sec%8.2f -> $sec2%8.2f (board: $best%.2f)$tag")
-        name -> best
-      } else name -> sec
+        // as the numerator. A failing repeat fails the query.
+        try {
+          val sec2 = once()
+          val best = robustSec(sec, sec2, () => once())
+          val tag = if (evicted.nonEmpty) s" (evicted ${evicted.mkString(",")})" else ""
+          System.err.println(
+            f"[bench] re-run $name%-36s $sec%8.2f -> $sec2%8.2f (board: $best%.2f)$tag")
+          Some(name -> best)
+        } catch { case NonFatal(e) =>
+          System.err.println(s"[bench] re-run $name FAILED: ${e.getMessage}")
+          failed += name
+          None }
+      } else Some(name -> sec)
     }
     val loadEnd = osBean.getSystemLoadAverage
     if (prev.nonEmpty) {
@@ -356,7 +288,8 @@ object Bench {
     // through a var here (rather than object state read in the same
     // argument list) keeps the board correct under any reordering of
     // the benchJson arguments
-    val (sf1Curve, sf1Warmup, sf1Runs) = scaleCurve(spark, sfDir, results.toMap)
+    val Sf1Curve(sf1Curve, sf1Warmup, sf1Runs, sf1Failed) =
+      scaleCurve(spark, sfDir, results.toMap)
     // sf1-curve drift adjudication (r11 verdict #1 — the board's last
     // unarbitrated surface): same policy as the base board, against
     // the previous board's sf1 ABSOLUTE seconds (a ratio comparison
@@ -380,8 +313,20 @@ object Bench {
       commonTotals = commonTotals,
       sf1Runs = sf1Runs,
       sf1Prev = prevBoard.sf1Queries,
-      sf1Adj = sf1Adj))
+      sf1Adj = sf1Adj,
+      failed = failed.toSeq ++ sf1Failed.map("sf1:" + _)))
     spark.stop()
+  }
+
+  /** Seconds `body` took, or `None` (logged) when it threw: a failing
+    * query is recorded as failed, never as an ordinary (fast) time.
+    * NonFatal only — fatal errors propagate. */
+  private[graft] def timed(name: String)(body: => Unit): Option[Double] = {
+    val t0 = System.nanoTime()
+    try { body; Some((System.nanoTime() - t0) / 1e9) }
+    catch { case NonFatal(e) =>
+      System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+      None }
   }
 
   /** One drift verdict, shared by the base board and the sf1 curve so
@@ -464,24 +409,24 @@ object Bench {
     "meta_catalog_cow_dml", "q_catalog_colocated_join",
     "meta_catalog_agg_pushdown")
 
+  /** The 10× curve: (name, seconds, ratio vs this run's base timing)
+    * per entry, the per-stage warmup seconds (r10 verdict #2: amortized
+    * sf1 staging with no artifact trail made the sim_semdedup ratio an
+    * unauditable billing artifact), every raw repeat per entry (s1, s2
+    * and the arbiter when taken — repeat disagreement is the in-session
+    * noise signature and feeds the sf1 "noise" verdict), and the
+    * entries that threw. */
+  private final case class Sf1Curve(entries: Seq[(String, Double, Double)],
+      warmup: Seq[(String, Double)], runs: Map[String, Seq[Double]],
+      failed: Seq[String])
+
   /** Time the heavy subset at 10× (generated once under target/scale/
-    * sf1 from the bench SF dir): returns the curve (name, seconds,
-    * ratio vs this run's base timing) AND the per-stage warmup
-    * seconds (r10 verdict #2: amortized sf1 staging with no artifact
-    * trail made the sim_semdedup ratio an unauditable billing
-    * artifact). Disable with SPARK_GRAFT_SF1=0. Failures degrade to
-    * an empty section — the bench line must always print. */
+    * sf1 from the bench SF dir). Disable with SPARK_GRAFT_SF1=0.
+    * Failures degrade to an empty section — the bench line must always
+    * print. */
   private def scaleCurve(spark: SparkSession, sfDir: String,
-                         base: Map[String, Double]):
-      (Seq[(String, Double, Double)], Seq[(String, Double)], Map[String, Seq[Double]]) = {
-    val warmupSf1 = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // every raw repeat per entry (s1, s2, and the arbiter when taken):
-    // rides in the full board so repeat disagreement — the in-session
-    // noise signature — is visible to a reader, and feeds the sf1
-    // adjudicator's "noise" verdict
-    val rawRuns = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    def curve(): Seq[(String, Double, Double)] =
-    if (sys.env.getOrElse("SPARK_GRAFT_SF1", "1") == "0") Seq.empty
+                         base: Map[String, Double]): Sf1Curve =
+    if (sys.env.getOrElse("SPARK_GRAFT_SF1", "1") == "0") Sf1Curve(Nil, Nil, Map.empty, Nil)
     else try {
       // The base board is recorded — release the base-SF silver cache
       // and staged checkpoint frames before the 10× phase, and nudge
@@ -493,69 +438,12 @@ object Bench {
       System.gc()
       val dest = ScaleUp.ensure(spark,
         sfDir, new java.io.File("target/scale/sf1").getAbsolutePath)
-      // warm the sf1 silver + pair caches like the base run's warmup
-      // block — the first consumer must not be billed for the
-      // one-time build (ratios then compare query work, not staging).
-      // The ANN top-k and embedding near-dup frames are included: in
-      // the base run the alphabetically-earlier sim_embed_* queries
-      // stage them before the audit reports run, so the reports' sf1
-      // ratios would otherwise compare query+staging to query-only.
-      //
-      // PER-STAGE, not one silent block (r10 verdict #2: one try
-      // around all stages meant a single failure silently skipped
-      // everything after it, and the first consumer — alphabetically
-      // sim_semdedup — got billed 10x-scale quantizer training on
-      // BOTH repeats, inflating its board ratio to 11.76x when the
-      // true warm ratio is ~6.6x). Each stage times into warmupSf1
-      // (ride in the board as "warmup_sf1"), and a failure is LOGGED
-      // and skipped without aborting the stages after it.
-      // NonFatal only — same rationale as the base warm() wrapper
-      // r19 (review item): ONE shared stage wrapper — the gold_daily
-      // staging previously duplicated this timing/error logic inline
-      def warmSf1Stage(name: String)(body: => Unit): Unit = {
-        val t0 = System.nanoTime()
-        try {
-          body
-          warmupSf1(name) = (System.nanoTime() - t0) / 1e9
-        } catch { case scala.util.control.NonFatal(e) =>
-          // NEGATED elapsed = this stage FAILED after that many
-          // seconds — the board JSON alone distinguishes failed from
-          // successful staging (r11 ADVICE: failure was stderr-only)
-          warmupSf1(name) = -((System.nanoTime() - t0) / 1e9)
-          System.err.println(s"[bench] sf1 warmup stage $name FAILED: ${e.getMessage}")
-        }
-      }
-      def warmSf1(name: String): Unit =
-        warmSf1Stage(name)(materialize(SparkEntry.queries(name)(spark, dest)))
-      warmSf1("silver_events")
-      // the sf1 curve carries two catalog rows (cow_dml, agg_pushdown)
-      // — stage their shared base mart like the base run's warmup
-      warmSf1Stage("gold_daily_staged") {
-        materialize(SparkEntry.stageGoldDaily(spark, dest))
-      }
-      warmSf1("dedup_ngram_jaccard")
-      warmSf1("dedup_clusters")
-      warmSf1("sim_embed_neardup")
-      // mirror the base warmup's signature staging (see above) so
-      // the gate report's sf1/base ratio compares query work to
-      // query work, not staging-included to staging-free
-      warmSf1("dedup_minhash_lsh")
-      warmSf1("dedup_simhash")
-      // mirror the base warmup's decode-once media staging so
-      // mm_media_features' sf1 ratio compares projection work to
-      // projection work (the 10x codec cost lives in the staging,
-      // at both scales)
-      warmSf1("mm_media_meta")
-      // stage the gold-mart audit's one-time costs (checkpoint
-      // shuffle files, codegen) so its billed repeats compare query
-      // work to query work — its sf1 ratio read as a consistent
-      // ~1.6-2.0x staging epoch for two rounds (r15 verdict #2)
-      warmSf1("quality_gold_report")
-      Seq("brute", "lsh", "ivf", "ivf_upsert", "sq8", "bq", "pq", "ivfpq")
-        .foreach(m => warmSf1(s"sim_embed_topk_$m"))
-      // abs: failed stages record NEGATED elapsed — see the base
-      // warmup total above
-      System.err.println(f"[bench] sf1 warmup staging took ${warmupSf1.values.map(math.abs).sum}%.2f s over ${warmupSf1.size} stages")
+      // per-stage warmup like the base run's, so ratios compare query
+      // work, not staging (see SparkEntry.warmRegistry for the
+      // sf1-only stages)
+      val warmup = Harness.warmAll(spark, dest, SparkEntry.warmStages(sf1 = true))
+      val rawRuns = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
+      val failed = scala.collection.mutable.ArrayBuffer.empty[String]
       // Repeat discipline (round-5 lesson: sf1 ratios moved up to 1.7x
       // between two clean stamped solo runs — at that noise level a
       // real 1.5x regression on the curve is invisible): measure each
@@ -564,18 +452,24 @@ object Bench {
       // hits); if the two disagree >1.3x, arbitrate with a third run
       // and take the median, else take the min (noise is one-sided —
       // GC, compaction, page-cache misses only ever inflate).
-      scaleCurveQueries.flatMap { name =>
+      val entries = scaleCurveQueries.flatMap { name =>
         try {
           val (sec, runs) = robustQueryTime(spark, dest, name)
           rawRuns(name) = runs
           System.err.println(f"[bench] sf1 $name%-36s runs ${runs.head}%7.2f/${runs(1)}%7.2f -> $sec%7.2f")
           val ratio = base.get(name).filter(_ > 0).map(sec / _).getOrElse(0.0)
           Seq((name, sec, ratio))
-        } catch { case scala.util.control.NonFatal(_) => Seq.empty }
+        } catch { case NonFatal(e) =>
+          System.err.println(s"[bench] sf1 $name FAILED: ${e.getMessage}")
+          failed += name
+          Seq.empty
+        }
       }
-    } catch { case scala.util.control.NonFatal(_) => Seq.empty }
-    (curve(), warmupSf1.toSeq, rawRuns.toMap)
-  }
+      Sf1Curve(entries, warmup, rawRuns.toMap, failed.toSeq)
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] sf1 curve FAILED: ${e.getMessage}")
+      Sf1Curve(Nil, Nil, Map.empty, Nil)
+    }
 
   /** Queries the judge's BASELINE.md targets map onto, plus the
     * flagship LLM-data-pipeline ops — the fallback subset when the
@@ -614,7 +508,8 @@ object Bench {
       commonTotals: Option[(Double, Double)] = None,
       sf1Runs: Map[String, Seq[Double]] = Map.empty,
       sf1Prev: Map[String, Double] = Map.empty,
-      sf1Adj: Map[String, String] = Map.empty): String = {
+      sf1Adj: Map[String, String] = Map.empty,
+      failed: Seq[String] = Seq.empty): String = {
     def fmt(v: Double): String = BigDecimal(v)
       .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     // HEAD sha: the NEXT board's adjudicator diffs prevSha..HEAD to
@@ -668,6 +563,14 @@ object Bench {
       val names = regressed.take(5).map("\"" + _ + "\"").mkString("[", ",", "]")
       s""""adjudication_summary":{"noise":$noise,"explained":$expl,"regressed":${regressed.size},"regressed_names":$names}"""
     }
+    // queries that threw: absent from `queries` and the total, named
+    // here so a failure never reads as a fast time; every compact tier
+    // carries the count and the first five names
+    def failedPart(names: Seq[String]): String =
+      if (failed.isEmpty) ""
+      else s""","failed_count":${failed.size},"failed":""" +
+        names.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedCompact = failedPart(failed.take(5))
     val adjFull = if (adj.isEmpty) "" else "," + adjObj(adj)
     val adjSummary = if (adj.isEmpty) "" else "," + adjSummaryObj(adj)
     // 10× scale-curve section: per-query seconds at sf1, the ratio vs
@@ -720,7 +623,7 @@ object Bench {
     }
     val fullTail = attributionExtra + commonExtra + gitHead + stamp
     val full = line(results, "", sf1Extra, adjFull,
-      warmupExtra + warmupSf1Extra, fullTail)
+      warmupExtra + warmupSf1Extra, fullTail + failedPart(failed))
     try {
       val w = new java.io.PrintWriter(fullFile)
       try w.println(full) finally w.close()
@@ -735,8 +638,9 @@ object Bench {
       // ~1700-char capture budget
       val omitted =
         s""","queries_omitted":${results.size - subset.size},"queries_full_file":"BENCH_FULL.json""""
+      val compactTail = fullTail + failedCompact
       val compact = line(subset, omitted, sf1Compact(sf1, "", sf1AdjSummary),
-        adjSummary, "", fullTail)
+        adjSummary, "", compactTail)
       if (compact.length <= 1700) compact
       else {
         // as the curve grows: keep only the ratios that signal scale
@@ -751,7 +655,7 @@ object Bench {
         val riskyLine = line(subset, omitted,
           sf1Compact(risky, s""","ratios_omitted":${sf1.size - risky.size}""",
             riskyAdjPart),
-          adjSummary, "", fullTail)
+          adjSummary, "", compactTail)
         if (riskyLine.length <= 1700) riskyLine
         else {
           // summary-arbitrated tier (r13: 12 risky entries with
@@ -763,18 +667,18 @@ object Bench {
           val summaryLine = line(subset, omitted,
             sf1Compact(worst, s""","ratios_omitted":${sf1.size - worst.size}""",
               sf1AdjSummary),
-            adjSummary, "", fullTail)
+            adjSummary, "", compactTail)
           if (summaryLine.length <= 1700) summaryLine
           else
             // guaranteed-fit floor (r11 ADVICE: the risky-capped line
             // had no further degradation path and could still
-            // overflow): headline queries + attribution only — the
-            // headline subset is a fixed-size set, so this line is
-            // bounded by construction; every dropped field is in the
-            // full file
+            // overflow): headline queries + attribution + at most
+            // five failed names only — the headline subset is a
+            // fixed-size set, so this line is bounded by construction;
+            // every dropped field is in the full file
             line(subset,
               omitted + s""","detail_dropped":"capture-budget"""",
-              "", "", "", attributionExtra + gitHead)
+              "", "", "", attributionExtra + gitHead + failedCompact)
         }
       }
     }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Construction-plan dump utility (r18): the ANN/audit queries are
   * served from staged localCheckpoint frames, so `graft.Explain` on
@@ -9,16 +9,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (the plans the stage build actually runs), which is where the
   * optimization evidence lives. Usage:
   *   runMain graft.PlanDump <outDir> <tag> [sfDir]
-  * writes <name>_construction_<tag>.txt per entry. */
+  * writes <name>_construction_<tag>.txt per entry. Runs on 4 cores
+  * so the committed `plans/` dumps are reproducible across hosts. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val tag = args(1)
     val dir = if (args.length > 2) args(2) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Harness.session(4)
     spark.sparkContext.setLogLevel("ERROR")
     val emb = graft.sources.Tables.embeddings(spark, dir)
     val entries: Seq[(String, () => DataFrame)] = Seq(

@@ -1,17 +1,19 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 
-/** Measurement harness (optimization guide §1): times one or more named
-  * SparkEntry queries at a given SF dir and prints a per-Spark-job
-  * breakdown — job id, duration, stage/task counts and the job group
-  * description — so the sequential-job overhead of a query is visible
-  * without the UI (disabled in this sandbox). Also reports the query's
-  * wall time split into plan-construction (DataFrame build, which for
-  * lifecycle queries runs real jobs) vs materialization.
+/** Targeted timing and profiling of named SparkEntry queries without
+  * paying for a full Bench board (optimization guide §1). After the
+  * board's base warmup ([[SparkEntry.warmStages]]), each query runs
+  * `reps` times; every rep snapshots the staged frames, times the
+  * query split into plan construction (DataFrame build, which for
+  * lifecycle queries runs real jobs) and materialization, prints a
+  * per-Spark-job table — job id, duration, stage/task counts and the
+  * job description — and evicts the stages the query created, so each
+  * rep is full work, not a cache hit.
   *
-  * Usage: runMain graft.Profile [sfDir] query [query ...]
+  * Usage: runMain graft.Profile sfDir reps query [query ...]
   */
 object Profile {
 
@@ -20,16 +22,11 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val names = if (args.length > 1) args.tail.toSeq else Seq("silver_events")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val reps = args.lift(1).flatMap(_.toIntOption).getOrElse(2)
+    val names = args.drop(2).toSeq
+    require(names.nonEmpty, "usage: Profile sfDir reps query...")
+    val spark = Harness.session()
+    Harness.warmAll(spark, sfDir, SparkEntry.warmStages(sf1 = false))
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Int, String)]()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[JobRow]()
@@ -38,8 +35,12 @@ object Profile {
     val execSite = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
-        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+        case s: SparkListenerSQLExecutionStart =>
           execSite.put(s.executionId, s.description); ()
+        // the description is read at job start; a finished execution
+        // has no more jobs, so drop it rather than grow per query
+        case e: SparkListenerSQLExecutionEnd =>
+          execSite.remove(e.executionId); ()
         case _ => ()
       }
       override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -64,31 +65,30 @@ object Profile {
         val st = jobs.remove(e.jobId)
         if (st != null) {
           val (t0, nStages, desc) = st
-          val n = Option(taskCounts.get(e.jobId)).map(_.get()).getOrElse(0)
+          val n = Option(taskCounts.remove(e.jobId)).map(_.get()).getOrElse(0)
           done.add(JobRow(e.jobId, (System.nanoTime() - t0) / 1e9, nStages, n, desc))
         }
       }
     })
 
-    // mirror the Bench warmup so profiled queries see the same staged state
-    Bench.materialize(SparkEntry.queries("silver_events")(spark, sfDir))
-
-    names.foreach { name =>
+    for (name <- names; i <- 1 to reps) {
+      val before = SparkEntry.stageNames(spark, sfDir)
       done.clear()
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, sfDir)
       val tPlan = (System.nanoTime() - t0) / 1e9
-      Bench.materialize(df)
+      Harness.materialize(df)
       val tAll = (System.nanoTime() - t0) / 1e9
       // drain listener events before reporting (listenerBus is
       // private[spark]; a short sleep suffices for a profiling tool)
       Thread.sleep(300)
-      println(f"\n===== $name: total $tAll%.2f s (plan-construction $tPlan%.2f s) =====")
+      println(f"\n===== $name rep$i: total $tAll%.2f s (plan-construction $tPlan%.2f s) =====")
       val rows = done.toArray(Array.empty[JobRow]).sortBy(_.id)
       println(f"jobs=${rows.length} job-sec-sum=${rows.map(_.sec).sum}%.2f")
       rows.foreach { r =>
         println(f"  job ${r.id}%4d ${r.sec}%7.3f s stages=${r.stages}%2d tasks=${r.tasks}%4d ${r.desc.take(90)}")
       }
+      SparkEntry.evictStages(spark, sfDir, SparkEntry.stageNames(spark, sfDir) -- before)
     }
     spark.stop()
   }

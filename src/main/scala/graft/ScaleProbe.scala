@@ -120,17 +120,13 @@ object ScaleProbe {
     * trustworthy decade. */
   private def timeAt(spark: SparkSession, dir: String,
                      label: String): (Map[String, Double], Map[String, Double]) = {
+    // a failed staging run (negated seconds) leaves the query out
     val staging = probeQueries.flatMap { name =>
-      val t0 = System.nanoTime()
-      try {
-        Bench.materialize(SparkEntry.queries(name)(spark, dir))
-        val sec = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[probe] $label staging $name%-28s $sec%7.2f s")
-        Seq(name -> sec)
-      } catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[probe] $label staging $name FAILED: ${e.getMessage}")
-        Seq.empty
-      }
+      Harness.warm(dir, name)(Harness.materialize(SparkEntry.queries(name)(spark, dir)))
+        .filter(_ >= 0).map { sec =>
+          System.err.println(f"[probe] $label staging $name%-28s $sec%7.2f s")
+          name -> sec
+        }
     }.toMap
     val warm = probeQueries.flatMap { name =>
       try {
@@ -190,16 +186,7 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val sf1Dir = ScaleUp.ensure(spark, sfDir,
       new java.io.File("target/scale/sf1").getAbsolutePath)

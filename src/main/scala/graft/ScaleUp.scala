@@ -178,15 +178,7 @@ object ScaleUpMain {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val destDir = args.drop(1).headOption
       .getOrElse(new java.io.File("target/scale/sf1").getAbsolutePath)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     println(s"[scaleup] ensured: ${ScaleUp.ensure(spark, srcDir, destDir)}")
     spark.stop()
   }

@@ -122,10 +122,6 @@ object SparkEntry {
     * staged, Bench-warmed, evicted with the session. */
   private def goldDaily(s: SparkSession, dir: String): DataFrame =
     staged(s, dir, "gold_daily")(DailySales.build(silver(s, dir)))
-  /** Bench warmup hook for the staged daily mart (creation is the
-    * materialization — [[staged]] localCheckpoints eagerly). */
-  private[graft] def stageGoldDaily(s: SparkSession, dir: String): DataFrame =
-    goldDaily(s, dir)
   private def annTopK(s: SparkSession, dir: String, method: String): DataFrame =
     staged(s, dir, s"ann_$method")(method match {
       case "brute" => graft.sim.EmbeddingSim.bruteForceTopKQuery(s, dir)
@@ -142,6 +138,57 @@ object SparkEntry {
       case "ivfpq" => graft.sim.IvfPqAnn.ivfPqTopK(Tables.embeddings(s, dir),
         centsOpt = Some(ivfCents(s, dir)))
     })
+
+  /** One warm stage: `run` builds the shared frames `creates` names
+    * (the [[stageNames]] keys a run adds when the stages before it in
+    * the registry have run) from the `inputs` tables, so that no
+    * measured query is billed for a one-time build a production
+    * pipeline persists as a table. `atBase`/`atSf1` select the board's
+    * base-SF warmup and the 10× curve's. */
+  private[graft] final case class WarmStage(name: String, inputs: Seq[String],
+      creates: Set[String], atBase: Boolean = true, atSf1: Boolean = true)(
+      val run: (SparkSession, String) => Unit)
+
+  private def warmQuery(q: String): (SparkSession, String) => Unit =
+    (s, dir) => Harness.materialize(queries(q)(s, dir))
+
+  /** The warm-stage registry Bench (base and sf1) and Profile read.
+    * Base-only: the lineitem listing and the curation verdicts (no 10×
+    * curve query reads them). Sf1-only: the frames the base board's
+    * alphabetically-earlier sim_embed_* queries stage before the audit
+    * reports run (ratios would otherwise compare query+staging to
+    * query-only), and the gold-mart audit's one-time checkpoint and
+    * codegen costs. */
+  private[graft] val warmRegistry: Seq[WarmStage] = Seq(
+    WarmStage("lineitem_listing", Seq("lineitem"), Set.empty, atSf1 = false)(
+      (s, dir) => { Tables.lineitem(s, dir).count(); () }),
+    WarmStage("silver", Seq("events"), Set.empty)((s, dir) => Harness.materialize(silver(s, dir))),
+    // the shared base table of the ~28 catalog/lifecycle/stream queries
+    WarmStage("gold_daily", Seq("events"), Set("gold_daily"))(
+      (s, dir) => Harness.materialize(goldDaily(s, dir))),
+    WarmStage("pairs", Seq("documents"), Set("pairs"))(warmQuery("dedup_ngram_jaccard")),
+    WarmStage("clusters", Seq("documents"), Set("clusters"))(warmQuery("dedup_clusters")),
+    WarmStage("verdicts", Seq("documents"), Set("verdicts"), atSf1 = false)(
+      warmQuery("text_curation_verdicts")),
+    WarmStage("neardup", Seq("embeddings"), Set("neardup"), atBase = false)(
+      warmQuery("sim_embed_neardup")),
+    // signature frames: the gate report sorts before the listing queries
+    WarmStage("minhash", Seq("documents"), Set("minhash"))(warmQuery("dedup_minhash_lsh")),
+    WarmStage("simhash", Seq("documents"), Set("simhash"))(warmQuery("dedup_simhash")),
+    // decode-once media frame: four mm_* consumers
+    WarmStage("media_decoded", Seq("documents"), Set("media_decoded"))(
+      warmQuery("mm_media_meta")),
+    WarmStage("quality_gold_report", Seq("events"), Set.empty, atBase = false)(
+      warmQuery("quality_gold_report"))
+  ) ++ Seq("brute", "lsh", "ivf", "ivf_upsert", "sq8", "bq", "pq", "ivfpq").map { m =>
+    // the shared coarse quantizer is built by its first consumer
+    val creates = if (m == "ivf") Set("ann_ivf", "ivf_cents") else Set(s"ann_$m")
+    WarmStage(s"ann_$m", Seq("embeddings"), creates, atBase = false)(
+      warmQuery(s"sim_embed_topk_$m"))
+  }
+
+  private[graft] def warmStages(sf1: Boolean): Seq[WarmStage] =
+    warmRegistry.filter(w => if (sf1) w.atSf1 else w.atBase)
 
   private[graft] def silverCacheSize: Int = silverCache.size
 

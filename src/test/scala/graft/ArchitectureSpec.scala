@@ -173,11 +173,10 @@ class ArchitectureSpec extends AnyFunSuite {
       "EqDeletes.scala" -> 1)
     val hits = offenders("mapPartitions", allow) ++
       offenders(".toRdd",
-        // Bench + TimeQueries: full-InternalRow materialization for
-        // honest timing (a bare count() lets pruning skip the output)
+        // Harness: full-InternalRow materialization for honest timing
+        // (a bare count() lets pruning skip the output)
         // EqDeletes: internal-value key collection (reason above)
-        Map("Bench.scala" -> 1, "TimeQueries.scala" -> 1,
-          "EqDeletes.scala" -> 1))
+        Map("Harness.scala" -> 1, "EqDeletes.scala" -> 1))
     assert(hits.isEmpty, hits.mkString("; "))
   }
 

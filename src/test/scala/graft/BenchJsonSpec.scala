@@ -196,6 +196,24 @@ class BenchJsonSpec extends AnyFunSuite {
       === Some("q_x" -> "regressed"))
   }
 
+  test("a throwing query is named in `failed`, never timed, on both line shapes") {
+    assert(Bench.timed("q_boom")(throw new RuntimeException("boom")) === None)
+    assert(Bench.timed("q_ok")(()).exists(_ >= 0))
+    intercept[InterruptedException](Bench.timed("q_fatal")(throw new InterruptedException()))
+    val small = Bench.benchJson(fakeResults(10), 1.0, "/tmp/sf", tmpFull,
+      failed = Seq("q_boom", "sf1:q_boom"))
+    assert(small.contains(""""failed_count":2,"failed":["q_boom","sf1:q_boom"]"""))
+    assert(!small.contains(""""q_boom":"""), "a failed query has no time")
+    val f2 = tmpFull
+    val boom = (1 to 8).map(i => s"q_boom_$i")
+    val big = Bench.benchJson(fakeResults(150), 99.9, "/tmp/sf", f2, failed = boom)
+    assert(big.length <= 1700)
+    assert(big.contains(""""failed_count":8,"failed":["q_boom_1","q_boom_2","q_boom_3","q_boom_4","q_boom_5"]"""))
+    assert(scala.io.Source.fromFile(f2).mkString.contains(
+      boom.map("\"" + _ + "\"").mkString(""""failed":[""", ",", "]")),
+      "BENCH_FULL.json names every failed query")
+  }
+
   test("failed warmup stages ride NEGATED so the artifact distinguishes them") {
     val wu = Seq("silver_events" -> 1.5, "dedup_clusters" -> -3.25)
     val small = Bench.benchJson(fakeResults(5), 1.0, "/tmp/sf", tmpFull, warmup = wu,

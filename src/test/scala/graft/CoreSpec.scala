@@ -53,6 +53,25 @@ class CoreSpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  test("warm registry: each stage creates exactly the keys it declares; failures negate, fatals propagate") {
+    // a private copy of the tables: its dir key keeps the stages this
+    // test builds and evicts apart from the ones other suites share
+    val dir = java.nio.file.Files.createTempDirectory("warm_registry_")
+    new java.io.File(sf).listFiles().foreach(f =>
+      java.nio.file.Files.copy(f.toPath, dir.resolve(f.getName)))
+    val d = dir.toString
+    try {
+      SparkEntry.warmRegistry.foreach { w =>
+        val before = SparkEntry.stageNames(spark, d)
+        assert(Harness.warm(d, w.name, w.inputs)(w.run(spark, d)).exists(_ >= 0), w.name)
+        assert(SparkEntry.stageNames(spark, d) -- before === w.creates, w.name)
+      }
+      assert(Harness.warm(d, "boom")(throw new RuntimeException("boom")).exists(_ < 0))
+      assert(Harness.warm(d, "absent", Seq("no_such_table"))(fail("must not run")) === None)
+      intercept[InterruptedException](Harness.warm(d, "fatal")(throw new InterruptedException()))
+    } finally SparkEntry.evictStages(spark, d, SparkEntry.stageNames(spark, d))
+  }
+
   test("silver: event_unique_id unique + not null (dbt unique/not_null analog)") {
     val n = silver.count()
     assert(n > 0)

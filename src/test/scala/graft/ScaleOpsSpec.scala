@@ -2,12 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.Salted
 import graft.sink.BucketedTables
 import graft.sources.Tables
 
-/** Scale-architecture operators: bucketed co-located joins (no
-  * exchange), salted aggregation (skew path ≡ direct path). */
+/** Scale-architecture operators: mergeable sketch rollups, bucketed
+  * co-located joins (no exchange), AQE skew-join splitting. */
 class ScaleOpsSpec extends AnyFunSuite {
   import TestSession._
 
@@ -77,19 +76,6 @@ class ScaleOpsSpec extends AnyFunSuite {
       val expected = li.join(o, "l_orderkey")
       assert(joined.count() === expected.count())
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
-  test("salted aggregation equals direct aggregation") {
-    val ev = Tables.events(spark, sf)
-    val salted = Salted.countSum(ev, Seq("event_type"), col("event_id"), col("value"))
-    val direct = ev.groupBy("event_type")
-      .agg(count(lit(1)).as("row_count"), sum(col("value")).as("value_sum"))
-    // counts identical; sums compared rounded (double add order differs
-    // by design — that is what the salting changes)
-    val j = salted.join(direct.withColumnRenamed("row_count", "rc2")
-        .withColumnRenamed("value_sum", "vs2"), "event_type")
-    assert(j.filter(col("row_count") =!= col("rc2")).count() === 0)
-    assert(j.filter(abs(col("value_sum") - col("vs2")) > 1e-6).count() === 0)
   }
 
   test("AQE splits a skewed join partition at runtime (skew=true)") {
